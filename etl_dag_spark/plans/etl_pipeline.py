@@ -10,11 +10,14 @@ Differences that matter at 100 TB (each one deliberate):
 
 - Reads are lazy Spark scans with explicit schemas (no inferSchema
   pass); renames are metadata-only projections.
-- Validation compiles to ONE aggregate scan per table instead of a
-  pandas boolean mask per rule.
-- ``strict=True`` reproduces the reference's raise-on-any-violation;
-  the default quarantines invalid rows to parquet and loads the rest —
-  a 100 TB load shouldn't be aborted by three bad rows.
+- The default quarantines invalid rows to parquet and loads the rest —
+  a 100 TB load shouldn't be aborted by three bad rows. Each table's CSV
+  is parsed once for its valid write, plus once for its quarantine write
+  when rows failed; the loaded and rejected counts are ``Observation``
+  metrics on the valid write, so counting launches no job.
+- ``strict=True`` reproduces the reference's raise-on-any-violation: one
+  ``rule_counts`` aggregate scan per table, all three before the first
+  write, so a violation leaves the previous load in place.
 - Country normalization is a literal-map Column expression, not a
   per-row ``pycountry.search_fuzzy`` call.
 - The load step is idempotent ``mode("overwrite")`` parquet — rerunning
@@ -25,11 +28,16 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_dag_spark.functions.country import iso3_column
-from etl_dag_spark.operators.validation import Rule, require_columns, split_valid
+from etl_dag_spark.operators.validation import (
+    Rule,
+    require_columns,
+    rule_counts,
+    split_valid,
+)
 from etl_dag_spark.plans.dag import DAG, Task
 from etl_dag_spark.sources.readers import read_source
 from etl_dag_spark.sources.sinks import overwrite_parquet
@@ -111,7 +119,8 @@ def build_pipeline(
     set (warehouse credentials etc., ETL_DAG.py:52-53) — checked by the
     first task, before any Spark job runs.
     Outputs land under ``out_dir``: fact_table/, products/, customers/,
-    plus quarantine/<table>/ for rejected rows (non-strict mode)."""
+    plus quarantine/<table>/ for rejected rows, rewritten on every load
+    (empty when no row failed)."""
     dag = DAG("reference_etl")
 
     def load_env_vars(ctx: dict) -> dict:
@@ -141,26 +150,39 @@ def build_pipeline(
         ).withColumn("COUNTRY_ISO3", iso3_column("COUNTRY"))
 
         frames = {"sales": sales, "products": products, "customers": customers}
-        loaded: dict[str, int] = {}
         for name, df in frames.items():
             require_columns(df, REQUIRED[name])
-            valid, invalid = split_valid(df, RULES[name])
-            n_bad = invalid.count()
-            if n_bad and strict:
-                bad = invalid.select(
-                    F.explode("__failed_rules").alias("rule")
-                ).groupBy("rule").count().collect()
-                detail = ", ".join(f"{r.rule} ({r['count']} rows)" for r in bad)
-                raise ValueError(f"validation failed for {name}: {detail}")
-            if n_bad:
-                overwrite_parquet(invalid, os.path.join(out_dir, "quarantine", name))
+        if strict:
+            # every table is checked before the first write, so a
+            # violation in any of them leaves the star schema untouched
+            for name, df in frames.items():
+                counts = rule_counts(df, [(r.name, r.predicate) for r in RULES[name]])
+                bad = [r for r in counts.collect() if r.violations]
+                if bad:
+                    detail = ", ".join(f"{r.rule_name} ({r.violations} rows)" for r in bad)
+                    raise ValueError(f"validation failed for {name}: {detail}")
+
+        rows = F.count(F.lit(1)).alias("rows")
+        loaded: dict[str, int] = {}
+        for name, df in frames.items():
+            # rows seen and rows kept are metrics of the valid write, so
+            # counting launches no job of its own
+            seen, kept = Observation(), Observation()
+            valid, invalid = split_valid(df.observe(seen, rows), RULES[name])
             out = valid
             if name == "customers":
                 # reference replaces COUNTRY with the ISO3 code (ETL_DAG.py:193)
                 out = valid.withColumn("COUNTRY", F.col("COUNTRY_ISO3")).drop("COUNTRY_ISO3")
             target = "fact_table" if name == "sales" else name
-            overwrite_parquet(out, os.path.join(out_dir, target))
-            loaded[name] = out.count()
+            overwrite_parquet(out.observe(kept, rows), os.path.join(out_dir, target))
+            loaded[name] = kept.get["rows"]
+            n_bad = seen.get["rows"] - loaded[name]
+            # a clean load still truncates last run's quarantine; limit(0)
+            # folds to an empty relation, so that write parses no CSV
+            overwrite_parquet(
+                invalid if n_bad else invalid.limit(0),
+                os.path.join(out_dir, "quarantine", name),
+            )
         return loaded
 
     dag.add(Task("load_env_vars", load_env_vars))

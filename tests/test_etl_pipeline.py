@@ -29,6 +29,13 @@ CUSTOMERS = """CustomerID,Name,Email,Country
 13,Edsger,edsger@example.nl,Atlantis
 """
 
+# the crafted inputs without their violating rows
+SALES_CLEAN = "".join(SALES.splitlines(keepends=True)[:3])
+PRODUCTS_CLEAN = "".join(
+    line for line in PRODUCTS.splitlines(keepends=True) if not line.startswith("102,")
+)
+CUSTOMERS_CLEAN = "".join(CUSTOMERS.splitlines(keepends=True)[:3])
+
 
 @pytest.fixture()
 def csv_paths(tmp_path):
@@ -56,11 +63,61 @@ def test_pipeline_quarantines_and_loads(spark, csv_paths, tmp_path):
         3: ["amount_positive"],
         4: ["date_valid"],
     }
+    # the observed counts agree with what was written
+    targets = {"sales": "fact_table", "products": "products", "customers": "customers"}
+    written = {k: spark.read.parquet(os.path.join(out, v)).count() for k, v in targets.items()}
+    assert ctx["load_data"] == written
+    quarantined = {
+        k: spark.read.parquet(os.path.join(out, "quarantine", k)).count() for k in targets
+    }
+    assert quarantined == {"sales": 2, "products": 1, "customers": 2}
+
+
+def test_pipeline_runs_one_job_per_write(spark, csv_paths, tmp_path):
+    """Each table's CSV is parsed once for its valid write and once for
+    its quarantine write; the loaded and rejected counts ride those
+    writes as observations. All three crafted tables have violations,
+    so a load is exactly six Spark jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("etl-pipeline-jobs", "run_pipeline job count")
+    try:
+        run_pipeline(spark, csv_paths, str(tmp_path / "wh6"))
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("etl-pipeline-jobs")
+    assert len(jobs) == 6, f"run_pipeline launched {len(jobs)} Spark jobs: {sorted(jobs)}"
 
 
 def test_pipeline_strict_reproduces_reference_failure(spark, csv_paths, tmp_path):
     with pytest.raises(ValueError, match="validation failed for sales"):
         run_pipeline(spark, csv_paths, str(tmp_path / "wh2"), strict=True)
+
+
+def test_pipeline_strict_checks_every_table_before_writing(spark, csv_paths, tmp_path):
+    """Clean sales, dirty products: strict mode must raise before the
+    fact table is written, not after."""
+    with open(csv_paths["sales"], "w") as fh:
+        fh.write(SALES_CLEAN)
+    out = tmp_path / "wh7"
+    with pytest.raises(ValueError, match=r"products: price_non_negative \(1 rows\)"):
+        run_pipeline(spark, csv_paths, str(out), strict=True)
+    assert not (out / "fact_table").exists()
+
+
+def test_clean_reload_truncates_quarantine(spark, csv_paths, tmp_path):
+    out = str(tmp_path / "wh8")
+    run_pipeline(spark, csv_paths, out)
+    for name, content in [
+        ("sales", SALES_CLEAN), ("products", PRODUCTS_CLEAN), ("customers", CUSTOMERS_CLEAN)
+    ]:
+        with open(csv_paths[name], "w") as fh:
+            fh.write(content)
+    ctx = run_pipeline(spark, csv_paths, out)
+    assert ctx["load_data"] == {"sales": 2, "products": 3, "customers": 2}
+    for name in ("sales", "products", "customers"):
+        q = spark.read.parquet(os.path.join(out, "quarantine", name))
+        assert q.count() == 0, f"stale quarantine rows left in {name}"
+        assert "__failed_rules" in q.columns
 
 
 def test_pipeline_is_idempotent_truncate_and_load(spark, csv_paths, tmp_path):
