@@ -96,6 +96,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_dag_spark.sources.versions import (
+    _refuse_duplicate_keys,
     delete_version,
     history,
     merge_version,
@@ -327,30 +328,16 @@ def run_table_sql(spark: SparkSession, sql: str) -> DataFrame | int:
         )
         keys = _merge_keys(m.group("on"), m.group("t"), m.group("s"))
         # SQL MERGE forbids multiple source rows matching one target
-        # row (Delta raises DELTA_MULTIPLE_SOURCE_ROW_MATCHING...);
-        # with duplicate source keys the tie-break below is arbitrary,
-        # so the committed state would be nondeterministic — refuse
-        # with one count-distinct aggregate BEFORE touching the table
-        # (r14 ADVICE fix). groupBy treats NULL keys as equal, which
-        # matches the underlying _latest_per_key collapse behavior.
-        from pyspark.sql import functions as F
-
-        dup = (
-            source.groupBy(*keys)
-            .count()
-            .where(F.col("count") > 1)
-            .limit(1)
-            .collect()
+        # row; with duplicate source keys the tie-break below is
+        # arbitrary, so the committed state would be nondeterministic —
+        # refuse BEFORE touching the table (r14 ADVICE fix)
+        _refuse_duplicate_keys(
+            source, keys,
+            "SQL MERGE forbids multiple source rows matching one target "
+            "row — deduplicate the source first (or use "
+            "merge_version(latest_wins=True) with a real ordering column "
+            "for event-time CDC)",
         )
-        if dup:
-            dup_key = {k: dup[0][k] for k in keys}
-            raise ValueError(
-                "MERGE source has duplicate rows for key "
-                f"{dup_key}: SQL MERGE forbids multiple source rows "
-                "matching one target row — deduplicate the source "
-                "first (or use merge_version(latest_wins=True) with a "
-                "real ordering column for event-time CDC)"
-            )
         # SQL MERGE semantics (latest_wins=False): the update row
         # replaces the target; order_col only tie-breaks duplicate
         # keys WITHIN the batch, which the check above rules out — any

@@ -11,8 +11,15 @@ from pyspark.sql import functions as F
 
 from etl_dag_spark.sources.versions import (
     _load_manifest,
+    alter_table_constraints,
+    apply_cdc_version,
+    delete_version,
     history,
+    merge_delete_version,
+    merge_update_version,
+    merge_version,
     read_version,
+    update_version,
     vacuum,
     write_version,
 )
@@ -2283,3 +2290,169 @@ def test_alter_table_schema_add_and_drop_columns(spark, tmp_path):
     m6 = _load_raw(path, 6)
     assert not m6.get("evolved")
     assert read_version(spark, path).columns == ["k", "score"]
+
+
+
+_KV = "k int, v string"
+_CDC = "k int, v string, seq int, op string"
+
+# One call per partial-rewrite verb (plus ALTER): (spark, path) -> version.
+_VERBS = {
+    "merge": lambda s, p, rows: merge_version(
+        s, p, s.createDataFrame(rows, _KV), ["k"], "k"
+    ),
+    "delete": lambda s, p, where: delete_version(s, p, where),
+    "update": lambda s, p, where: update_version(
+        s, p, {"v": "upper(v)"}, where
+    ),
+    "merge_delete": lambda s, p, keys: merge_delete_version(
+        s, p, s.createDataFrame([(k,) for k in keys], "k int"), ["k"]
+    ),
+    "merge_update": lambda s, p, rows, ins=False: merge_update_version(
+        s, p, s.createDataFrame(rows, _KV), ["k"], {"v": "s.v"},
+        insert_unmatched=ins,
+    ),
+    "cdc_apply": lambda s, p, rows: apply_cdc_version(
+        s, p, s.createDataFrame(rows, _CDC), ["k"], "seq",
+        drop_order_col=True,
+    ),
+}
+
+
+def _kv_table(spark, path):
+    """A 4-file table: keys 0-39, ten per file (one overwrite plus
+    three appends, each written as a single file)."""
+    for i in range(4):
+        rows = [(k, f"v{k}") for k in range(10 * i, 10 * i + 10)]
+        write_version(
+            spark.createDataFrame(rows, _KV).coalesce(1),
+            path,
+            op="overwrite" if i == 0 else "append",
+        )
+    assert len(_load_manifest(path, 4)["files"]) == 4
+
+
+# case -> (verb call on the 4-file table, Spark jobs it launches). The
+# counts cover the touched-file discovery scan, the rewrite's write,
+# any verb-specific aggregate (duplicate-key refusal, constraint
+# check), and the exchanges AQE materializes as jobs of their own.
+# merge_update_insert_no_match guards against a rewrite that builds a
+# join over the empty touched frame, which Spark does not fold away.
+_VERB_JOBS = {
+    "merge": (lambda s, p: _VERBS["merge"](s, p, [(3, "x"), (99, "n")]), 6),
+    "delete": (lambda s, p: _VERBS["delete"](s, p, "k = 3"), 3),
+    "delete_nothing": (lambda s, p: _VERBS["delete"](s, p, "k < 0"), 2),
+    "update": (lambda s, p: _VERBS["update"](s, p, "k = 3"), 3),
+    "update_nothing": (lambda s, p: _VERBS["update"](s, p, "k < 0"), 2),
+    "merge_delete": (lambda s, p: _VERBS["merge_delete"](s, p, [3]), 8),
+    "merge_update": (
+        lambda s, p: _VERBS["merge_update"](s, p, [(3, "x")]), 9
+    ),
+    "merge_update_insert_no_match": (
+        lambda s, p: _VERBS["merge_update"](s, p, [(100, "x")], True), 7
+    ),
+    "cdc_apply": (
+        lambda s, p: _VERBS["cdc_apply"](
+            s, p, [(3, "x", 1, "U"), (4, None, 1, "D"), (99, "n", 1, "I")]
+        ),
+        9,
+    ),
+    "alter_constraints": (
+        lambda s, p: alter_table_constraints(s, p, add_check="k >= 0"), 2
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_VERB_JOBS))
+def test_verb_job_counts(spark, tmp_path, case):
+    path = str(tmp_path / "tbl")
+    _kv_table(spark, path)
+    call, want = _VERB_JOBS[case]
+    sc = spark.sparkContext
+    group = f"versions-jobs-{case}"
+    sc.setJobGroup(group, f"{case} job count")
+    try:
+        assert call(spark, path) == 5
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == want, f"{case} launched {len(jobs)} Spark jobs: {sorted(jobs)}"
+
+
+_PCT_CASES = {
+    "merge": (
+        lambda s, p: _VERBS["merge"](s, p, [(2, "B"), (4, "d")]),
+        [(1, "a"), (2, "B"), (3, "c"), (4, "d")],
+    ),
+    "delete": (
+        lambda s, p: _VERBS["delete"](s, p, "k = 2"), [(1, "a"), (3, "c")]
+    ),
+    "update": (
+        lambda s, p: _VERBS["update"](s, p, "k = 2"),
+        [(1, "a"), (2, "B"), (3, "c")],
+    ),
+    "merge_delete": (
+        lambda s, p: _VERBS["merge_delete"](s, p, [2]), [(1, "a"), (3, "c")]
+    ),
+    "merge_update": (
+        lambda s, p: _VERBS["merge_update"](s, p, [(2, "B")]),
+        [(1, "a"), (2, "B"), (3, "c")],
+    ),
+    "cdc_apply": (
+        lambda s, p: _VERBS["cdc_apply"](
+            s, p, [(2, "B", 1, "U"), (3, None, 1, "D")]
+        ),
+        [(1, "a"), (2, "B")],
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_PCT_CASES))
+def test_verbs_on_percent_encoded_table_path(spark, tmp_path, verb):
+    """``_metadata.file_path`` is a URI: a table under a directory with
+    a space or a ``%`` must still match its touched files against the
+    manifest's plain paths."""
+    path = str(tmp_path / "a b%41" / "t")
+    write_version(
+        spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], _KV), path
+    )
+    call, want = _PCT_CASES[verb]
+    assert call(spark, path) == 2
+    assert _rows(read_version(spark, path)) == want
+    assert _load_manifest(path, 2)["replaced"]
+
+
+def test_restore_publishes_checkpoint_on_cadence(spark, tmp_path):
+    """A RESTORE that lands on a ``_CHECKPOINT_EVERY`` version writes the
+    full-state sidecar like every other commit, and reads and CDC across
+    it are the same with or without the sidecar."""
+    from etl_dag_spark.sources.versions import cdc_rows, restore_version
+
+    path = str(tmp_path / "tbl")
+    for i in range(1, 10):
+        write_version(
+            spark.createDataFrame([(i, f"v{i}")], _KV),
+            path,
+            op="overwrite" if i == 1 else "append",
+        )
+    assert restore_version(path, 5) == 10
+    ckpt = f"{path}/_manifests/v00000010.ckpt.json"
+    assert os.path.exists(ckpt)
+    write_version(spark.createDataFrame([(11, "v11")], _KV), path, op="append")
+
+    def observe():
+        return (
+            [_rows(read_version(spark, path, v)) for v in (9, 10, 11)],
+            sorted(
+                (r.k, r._change_type)
+                for r in cdc_rows(spark, path, 8, 11, key_cols=["k"]).collect()
+            ),
+        )
+
+    with_ckpt = observe()
+    assert with_ckpt[0][1] == [(k, f"v{k}") for k in range(1, 6)]
+    assert with_ckpt[1] == [
+        (6, "delete"), (7, "delete"), (8, "delete"), (11, "insert"),
+    ]
+    os.unlink(ckpt)
+    assert observe() == with_ckpt
